@@ -142,9 +142,7 @@ def validate_pipeline(doc: dict) -> tuple[CrawlConfig, dict[str, str], str]:
     _defaults = CrawlConfig()
     for k, v in crawl.items():
         dv = getattr(_defaults, k)
-        if dv is None:  # bool | None fields
-            ok = v is None or isinstance(v, bool)
-        elif isinstance(dv, bool):
+        if isinstance(dv, bool):
             ok = isinstance(v, bool)
         elif isinstance(dv, int):
             ok = isinstance(v, int) and not isinstance(v, bool)
@@ -152,7 +150,7 @@ def validate_pipeline(doc: dict) -> tuple[CrawlConfig, dict[str, str], str]:
             ok = isinstance(v, type(dv))
         if not ok:
             raise PipelineConfigError(
-                f"crawl.{k}: expected {type(dv).__name__ if dv is not None else 'bool/null'},"
+                f"crawl.{k}: expected {type(dv).__name__},"
                 f" got {type(v).__name__} ({v!r})"
             )
     cfg = CrawlConfig(**crawl)

@@ -41,6 +41,17 @@ from data_collector_spark.operators.politeness import compile_budgets
 
 SEED_EPOCH = datetime(2024, 1, 1)
 
+# Adaptive pre-dedup of RAW link strings before the canonicalize UDF.
+# Measured (SCALING_r04 link_prededup_ab + 1M-smoke repeats): it wins
+# +15-30% whenever the dup factor exceeds ~1.3 — the per-row Python/Arrow
+# cost it saves far outweighs the JVM groupBy — and the only observed
+# negative (-4%, SCALING_r03 heavy-page corpus) sits inside that session's
+# noise band. ON for round 0 (the winning prior), then ON iff the previous
+# round observed links_extracted/unique-candidates >= this threshold, so a
+# duplicate-free webgraph stops paying the groupBy from round 1. Output is
+# identical either way (test_link_prededup_modes_equivalent).
+LINK_PREDEDUP_MIN_DUP = 1.3
+
 
 @dataclass
 class CrawlConfig:
@@ -89,22 +100,6 @@ class CrawlConfig:
     # rule count split_robots falls back to a shuffle join on host.
     # Decided ONCE per crawl (the rules table is crawl-constant)
     robots_broadcast_max_rows: int = 5_000_000
-    # None = detect duplicate captures with one corpus scan at crawl
-    # start; True/False skips the scan (e.g. a snapshot known unique)
-    corpus_unique_urls: bool | None = None
-    # Pre-dedup of RAW link strings before the canonicalize UDF. Measured
-    # (SCALING_r04 link_prededup_ab + 1M-smoke repeats): ON wins +15-30%
-    # whenever the dup factor exceeds ~1.3 — the per-row Python/Arrow cost
-    # it saves far outweighs the JVM groupBy — and the only observed
-    # negative (-4%, SCALING_r03 heavy-page corpus) sits inside that
-    # session's noise band. None = adaptive: ON for round 0 (the winning
-    # prior), then ON iff the previous round observed
-    # links_extracted/unique-candidates >= link_prededup_min_dup — so a
-    # genuinely duplicate-free webgraph stops paying the groupBy from
-    # round 1. True/False forces it (semantics identical either way,
-    # pinned by test_link_prededup_modes_equivalent).
-    link_prededup: bool | None = None
-    link_prededup_min_dup: float = 1.3
     # True = Bloom probes shuffle keys to their shard and read ONLY that
     # shard's bitmap from the checkpoint dir (no whole-filter broadcast —
     # mandatory once the filter outgrows executor memory at 10^10 keys);
@@ -125,18 +120,6 @@ class CrawlConfig:
     # histories are compacted into one base dir (state.compact), bounding
     # read_all's per-round file-listing cost over long crawls; 0 = never
     compact_every_rounds: int = 0
-    # persist the salted politeness-window stage so the full-frontier sort
-    # runs once per round (wave + deferred both branch from it); released
-    # before each round returns. False = stateless plans (pre-r5 shape)
-    cache_wave_stage: bool = True
-    # issue the independent per-round writes (fetch_log, frontier) and the
-    # lineage top-k from a thread pool instead of serially (r6): overlaps
-    # their fixed per-job costs — the serial-driver share that taxes the
-    # N->4N scaling bar. Results are byte-identical either way (pinned by
-    # test_parallel_writes_equivalent); False = the pre-r6 serial shape
-    # (also the safe setting for a catalog adapter whose commit protocol
-    # is not concurrency-safe — the default parquet round dirs are)
-    parallel_writes: bool = True
 
     def make_bloom(self):
         if not self.use_bloom:
@@ -163,6 +146,16 @@ class CrawlConfig:
             dirpath, self.bloom_shards, self.bloom_bits, self.bloom_k,
             load_bitmaps=not self.bloom_probe_via_files,
         )
+
+    def fill_bloom(self, bloom, df: DataFrame, dirpath: str) -> None:
+        """Add ``df``'s keys to ``bloom`` and persist its shards under
+        ``dirpath``. File-backed mode ORs each shard group straight into
+        its shard file (no bitmap bytes ever reach the driver)."""
+        if self.bloom_probe_via_files:
+            bloom.add_df_via_files(df, dirpath)
+        else:
+            bloom.add_df(df)
+            bloom.save(dirpath)
 
 
 def init_crawl(
@@ -203,11 +196,7 @@ def init_crawl(
     if cfg.bloom_min_seen_rows == 0 or n_seen0 >= cfg.bloom_min_seen_rows:
         bloom = cfg.make_bloom()
         if bloom is not None:
-            if cfg.bloom_probe_via_files:
-                bloom.add_df_via_files(state.read_round(spark, "seen", 0), state.bloom_dir())
-            else:
-                bloom.add_df(state.read_round(spark, "seen", 0))
-                bloom.save(state.bloom_dir())
+            cfg.fill_bloom(bloom, state.read_round(spark, "seen", 0), state.bloom_dir())
     # seen-row count rides the manifest so resume never re-counts the
     # table (the activation gate reads it O(1) driver-side)
     state.commit(-1, None, extra={"initialized": True, "seen_rows": n_seen0})
@@ -257,11 +246,7 @@ def run_crawl(
         bloom = cfg.make_bloom()
         seen_all = state.read_all(spark, "seen")
         if bloom is not None and seen_all is not None:
-            if cfg.bloom_probe_via_files:
-                bloom.add_df_via_files(seen_all, state.bloom_dir())
-            else:
-                bloom.add_df(seen_all)
-                bloom.save(state.bloom_dir())
+            cfg.fill_bloom(bloom, seen_all, state.bloom_dir())
 
     # ---- once-per-crawl setup (never repeated inside the round loop) ----
     # seen-size activation gate (bloom_min_seen_rows): the running count
@@ -296,13 +281,10 @@ def run_crawl(
     robots_rules = robots if n_robots_rules > 0 else None
     robots_broadcast = n_robots_rules <= cfg.robots_broadcast_max_rows
     pages_partitions = pages.rdd.getNumPartitions()
-    if cfg.corpus_unique_urls is None:
-        # one column-pruned scan: do multiple captures of one URL exist?
-        dedup_captures = (
-            pages.groupBy("url_canon").count().filter("count > 1").limit(1).count() > 0
-        )
-    else:
-        dedup_captures = not cfg.corpus_unique_urls
+    # one column-pruned scan: do multiple captures of one URL exist?
+    dedup_captures = (
+        pages.groupBy("url_canon").count().filter("count > 1").limit(1).count() > 0
+    )
 
     metrics: list[RoundMetrics] = []
     start = state.last_committed_round() + 1  # type: ignore[operator]
@@ -361,12 +343,7 @@ def run_crawl(
         if cfg.recrawl_ttl_rounds == 0 and frontier_rows == 0:
             break
         link_prededup = (
-            cfg.link_prededup
-            if cfg.link_prededup is not None
-            else (
-                link_dup_factor is None
-                or link_dup_factor >= cfg.link_prededup_min_dup
-            )
+            link_dup_factor is None or link_dup_factor >= LINK_PREDEDUP_MIN_DUP
         )
         # activation crossing: build the filter ONCE from the full seen
         # table (the scheme-rebuild path), then maintain it incrementally
@@ -378,11 +355,7 @@ def run_crawl(
         ):
             seen_all_b = state.read_all(spark, "seen")
             if seen_all_b is not None:
-                if cfg.bloom_probe_via_files:
-                    bloom.add_df_via_files(seen_all_b, state.bloom_dir())
-                else:
-                    bloom.add_df(seen_all_b)
-                    bloom.save(state.bloom_dir())
+                cfg.fill_bloom(bloom, seen_all_b, state.bloom_dir())
             _filter_built = True
         bloom_for_round = (
             bloom if (cfg.bloom_min_seen_rows == 0 or _filter_built) else None
@@ -390,23 +363,12 @@ def run_crawl(
         with events.span("round", f"round={n}", round=n):
             m = run_round(
                 spark, state, pages, robots_rules, budget_spec, bloom_for_round, n,
-                skew_salt=cfg.skew_salt,
-                retry_max=cfg.retry_max,
-                retry_backoff=cfg.retry_backoff,
-                retry_backoff_base=cfg.retry_backoff_base,
-                retry_backoff_step=cfg.retry_backoff_step,
-                daily_budget=cfg.daily_budget,
-                rounds_per_day=cfg.rounds_per_day,
-                budget_pools=cfg.budget_pools,
+                cfg,
                 est_wave_rows=wave_bound(),
-                wave_broadcast_max_rows=cfg.wave_broadcast_max_rows,
                 pages_partitions=pages_partitions,
                 dedup_captures=dedup_captures,
-                bloom_probe_via_files=cfg.bloom_probe_via_files,
                 link_prededup=link_prededup,
                 robots_broadcast=robots_broadcast,
-                cache_wave_stage=cfg.cache_wave_stage,
-                parallel_writes=cfg.parallel_writes,
             )
             # ADVICE r4, documented limit: the denominator is the
             # POST-canonicalization unique count, so invalid links (NULL

@@ -122,11 +122,7 @@ def purge_urls(
             bf = cfg.make_bloom()
             seen_all = state.read_all(spark, "seen")
             if seen_all is not None:
-                if cfg.bloom_probe_via_files:
-                    bf.add_df_via_files(seen_all, bloom_dir)
-                else:
-                    bf.add_df(seen_all)
-                    bf.save(bloom_dir)
+                cfg.fill_bloom(bf, seen_all, bloom_dir)
             removed["filter_fingerprints"] = -1  # rebuilt, not decremented
 
     # keep the manifest's running seen count (the r5 activation-gate input)

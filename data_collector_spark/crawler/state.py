@@ -68,7 +68,6 @@ class RoundMetrics:
     enqueued: int = 0         # new frontier entries
     wall_sec: float = 0.0
     per_partition: dict = field(default_factory=dict)
-    phase_sec: dict = field(default_factory=dict)
 
     def as_dict(self) -> dict:
         return {k: v for k, v in self.__dict__.items()}
@@ -103,11 +102,9 @@ class RoundTableIO:
     BLOCKED ON JARS, not on engine shape — the seam's contract is pinned
     by the adapter-pass-through crawl test and the storage-partitioned-
     join plan tests instead. Note for cluster deployments: the engine
-    issues the fetch_log and frontier round writes CONCURRENTLY by
-    default (round.py parallel_writes) — they target different TABLES, so
-    Iceberg's per-table optimistic commit is unaffected; an adapter whose
-    commit protocol serializes across tables should run with
-    CrawlConfig(parallel_writes=False).
+    issues the fetch_log, frontier and seen round writes CONCURRENTLY
+    (round.py's write pool) — they target different TABLES, so Iceberg's
+    per-table optimistic commit is unaffected.
     """
 
     def __init__(self, state: "CrawlState"):

@@ -247,11 +247,6 @@ def lsh_near_pairs(
     # 140M band-collision rows, 93M distinct candidate sig pairs, 753M
     # output rows):
     #
-    # - the persisted doc->rep map carries the signature as 32 PRIMITIVE
-    #   long columns, never as an array: Spark's in-memory columnar cache
-    #   only serves codegen/vectorized scans for primitive schemas, and an
-    #   array column silently demoted every operator above the cache to
-    #   interpreted evaluation;
     # - band keys are PACKED slices: minhash values are < 2^31 (mod
     #   MINHASH_P), so two pack exactly into one long — band b's join key
     #   is ceil(rpb/2) primitive longs (cheap shuffle hashing, no array
@@ -276,16 +271,14 @@ def lsh_near_pairs(
     npack = (rpb + 1) // 2
     hcols = [f"h{i}" for i in range(n_perm)]
     w = Window.partitionBy(*hcols)
-    withrep = (
-        sig.select(F.col(id_col).alias("_id"), *hcols)
-        .select("_id", *hcols, F.min("_id").over(w).alias("_rep"))
-        .persist()
+    # the doc->rep map is NOT persisted: the returned plan is lazy, so a
+    # cache would outlive the call for the whole session. Measured at
+    # sf0.1 (4 cores): the uncached query is no slower than the cached one
+    withrep = sig.select(F.col(id_col).alias("_id"), *hcols).select(
+        "_id", *hcols, F.min("_id").over(w).alias("_rep")
     )
-    n_docs = withrep.count()  # materializes the cache up front — lazy
-    # fill inside the main action measured WORSE (convoying: six branches
-    # block on the same partition locks mid-job; 39 -> 48 s at sf1.0)
     if broadcast_docs is None:
-        broadcast_docs = n_docs <= 500_000
+        broadcast_docs = sig.count() <= 500_000
 
     pexprs, pmeta = [], []  # pmeta: (band, slot) -> has a hi+lo or hi-only pack
     for bnd in range(bands):
@@ -304,7 +297,7 @@ def lsh_near_pairs(
     # 2x defaultParallelism costs nothing and pins the enumeration's
     # parallelism to the machine instead of to the input's byte size
     # (a parquet-backed rep table collapsed the whole 140M-pair stage to
-    # ONE task, 133 s vs 27 s; on the cached path the A/B is a wash
+    # ONE task, 133 s vs 27 s; on an in-memory rep table the A/B is a wash
     # within this box's +/-30% noise, kept as the scale-safe shape;
     # scale-adaptive, never a hard-coded count)
     par = 2 * sig.sparkSession.sparkContext.defaultParallelism
@@ -506,15 +499,12 @@ def simhash_near_pairs(
     width = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << width) - 1
     w = Window.partitionBy("simhash")
-    withrep = (
-        sigs.select(F.col(id_col).alias("_id"), "simhash")
-        .select("_id", "simhash", F.min("_id").over(w).alias("_rep"))
-        .persist()
+    # not persisted: see lsh_near_pairs
+    withrep = sigs.select(F.col(id_col).alias("_id"), "simhash").select(
+        "_id", "simhash", F.min("_id").over(w).alias("_rep")
     )
-    n_docs = withrep.count()  # up-front cache materialization (see
-    # lsh_near_pairs: lazy fill convoys)
     if broadcast_docs is None:
-        broadcast_docs = n_docs <= 500_000
+        broadcast_docs = sigs.count() <= 500_000
     # repartition rationale: see lsh_near_pairs (tiny-bytes rep table,
     # quadratic band fan-out)
     par = 2 * sigs.sparkSession.sparkContext.defaultParallelism

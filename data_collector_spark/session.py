@@ -14,6 +14,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical memory, capped at 16g. The rest stays free for
+    the Python workers, the OS and the tmpfs shuffle dir (``/dev/shm``
+    pages count against the same RAM); a heap sized to the whole machine
+    gets the JVM OOM-killed once it grows."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1024, min(16 * 1024, total // 4 // 2**20))}m"
+
+
 def get_spark(
     app_name: str = "data-collector-spark",
     cores: int | str | None = None,
@@ -55,7 +64,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local corpora are small relative to the default 128 MB split size;

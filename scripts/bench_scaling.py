@@ -166,9 +166,8 @@ def run_shuffle_calibration(cores: int) -> float:
     for the engine's shuffle-bound phases (frontier dedup/anti-join). The
     pandas extract kernel measures the memory-bus ceiling of UDF work;
     shuffle work (hash, exchange write/read, sort-agg) has its OWN
-    hardware ceiling on this box — pairing each phase with its own
-    workload-class kernel is what makes the per-phase attribution
-    interpretable."""
+    hardware ceiling on this box, so each workload class is graded
+    against its own kernel."""
     cpus = ",".join(str(i) for i in range(cores))
     out = subprocess.run(
         ["taskset", "-c", cpus, sys.executable, "-c",
@@ -255,7 +254,7 @@ def main() -> None:
                     help="skip the raw-hardware extract-kernel calibration")
     ap.add_argument("--cfg", default="{}",
                     help="JSON dict of extra CrawlConfig kwargs for A/B "
-                         "experiments (e.g. '{\"link_prededup\": false}')")
+                         "experiments (e.g. '{\"skew_salt\": 8}')")
     ap.add_argument("--shuffle-mult", type=int, default=None,
                     help="shuffle partitions = MULT * cores at each level "
                          "(default: session factory's max(8, 2*cores))")
@@ -297,34 +296,6 @@ print("GENDONE")
         "pass_raw": eff >= 0.8,
     }
 
-    # per-phase attribution (VERDICT r4 #1): the same RoundMetrics.phase_sec
-    # marks at both core counts name WHERE the ratio is lost — a phase whose
-    # efficiency sits at the kernel ceiling is memory-bus-bound hardware, a
-    # phase far below it is engine structure (serial driver work, fixed job
-    # overhead). driver_other = wall not covered by any phase mark (commit,
-    # recrawl bookkeeping, inter-round driver gaps).
-    def phase_totals(res: dict) -> dict:
-        tot: dict[str, float] = {}
-        for r in res["rounds"]:
-            for k, v in (r.get("phase_sec") or {}).items():
-                tot[k] = tot.get(k, 0.0) + v
-        tot["driver_other"] = max(0.0, res["wall_sec"] - sum(tot.values()))
-        return tot
-
-    pa, pb = phase_totals(a), phase_totals(b)
-    result["phase_attribution"] = {
-        k: {
-            "a_sec": round(pa.get(k, 0.0), 2),
-            "b_sec": round(pb.get(k, 0.0), 2),
-            "efficiency": (
-                round((pa.get(k, 0.0) / pb[k]) / ratio, 3) if pb.get(k) else None
-            ),
-            "b_share": (
-                round(pb.get(k, 0.0) / b["wall_sec"], 3) if b["wall_sec"] else None
-            ),
-        }
-        for k in sorted(set(pa) | set(pb))
-    }
     if not args.no_calibrate:
         # hardware ceiling for this workload class on this box: the same
         # extract kernel under raw multiprocessing (no Spark). On a real
@@ -342,8 +313,8 @@ print("GENDONE")
             "rate_a": round(sa, 0), "rate_b": round(sb, 0),
             "shuffle_hw_efficiency": round(shuf_eff, 3),
             "covers": "exchange/sort/agg ceiling — pairs with the "
-                      "frontier_write/fetch_log phases the same way the "
-                      "extract kernel pairs with fetch_extract",
+                      "frontier/fetch_log writes the same way the "
+                      "extract kernel pairs with the extract pass",
         }
         result["hw_calibration"] = {
             "kernel": "extract_text+links, pure multiprocessing",

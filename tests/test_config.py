@@ -102,6 +102,8 @@ def test_env_override_type_and_shape_violations_fail_fast(tmp_path):
     "mutate,msg",
     [
         (lambda d: d["crawl"].update(bogus=1), "unknown crawl keys"),
+        # a deleted knob fails fast instead of being silently ignored
+        (lambda d: d["crawl"].update(parallel_writes=False), "parallel_writes"),
         (lambda d: d["crawl"].update(max_rounds=0), "max_rounds"),
         (lambda d: d["crawl"].update(retry_max=-1), "retry_max"),
         (lambda d: d["inputs"].pop("seeds"), "inputs.seeds"),

@@ -13,6 +13,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from data_collector_spark.crawler import driver
 from data_collector_spark.crawler.driver import CrawlConfig, run_crawl
 from data_collector_spark.crawler.state import CrawlState
 from data_collector_spark.functions.extract import extract_text_series
@@ -223,34 +224,6 @@ def test_broadcast_gate_preserves_semantics(spark, tmp_path, corpus):
     assert snap(st_b) == snap(st_s)
 
 
-def test_wave_stage_cache_preserves_semantics(spark, tmp_path, corpus):
-    """cache_wave_stage only changes WHEN the salted window materializes
-    (once, cached) — wave, deferred, ordering, and the seen set must be
-    identical to the stateless-plan shape."""
-    _, m_on, st_on = crawl(spark, tmp_path, corpus, "wsc_on")
-    _, m_off, st_off = crawl(
-        spark, tmp_path, corpus, "wsc_off",
-        CrawlConfig(max_rounds=3, cache_wave_stage=False),
-    )
-
-    def snap(st):
-        seen = sorted(r["url_sha1"] for r in st.read_all(spark, "seen").collect())
-        log = sorted(
-            (r["round"], r["host"], r["seq_in_host"], r["url_sha1"])
-            for r in st.read_all(spark, "fetch_log")
-            .filter(F.col("status").isin("fetched", "dead"))
-            .collect()
-        )
-        return seen, log
-
-    assert snap(st_on) == snap(st_off)
-    assert [m.deferred_by_politeness for m in m_on] == [
-        m.deferred_by_politeness for m in m_off
-    ]
-    # the cache is released before each round returns
-    assert not spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-
-
 def test_bucketed_corpus_above_gate_matches_broadcast(spark, tmp_path, corpus):
     """The cluster-scale above-gate layout end-to-end: the corpus served
     from a url_canon-bucketed TABLE (the Iceberg bucket(url_canon)
@@ -328,15 +301,13 @@ def test_all_policies_combined(spark, tmp_path, corpus):
     assert snap(st1) == snap(st2)  # deterministic under the full policy stack
 
 
-def test_link_prededup_modes_equivalent(spark, tmp_path, corpus):
+def test_link_prededup_modes_equivalent(spark, tmp_path, corpus, monkeypatch):
     """The raw-link pre-dedup is a pure plan change (two-level min == one
-    min): forced on, forced off, and the adaptive gate must all yield an
-    identical fetch log and seen set."""
-    def go(name, mode):
-        wd, _, state = crawl(
-            spark, tmp_path, corpus, name,
-            CrawlConfig(max_rounds=3, link_prededup=mode),
-        )
+    min): the gate held on every round and the gate off from round 1 must
+    yield an identical fetch log and seen set."""
+    def go(name, min_dup):
+        monkeypatch.setattr(driver, "LINK_PREDEDUP_MIN_DUP", min_dup)
+        wd, _, state = crawl(spark, tmp_path, corpus, name)
         seen = sorted(r["url_sha1"] for r in state.read_all(spark, "seen").collect())
         log = sorted(
             (r["round"], r["host"], r["seq_in_host"], r["url_sha1"])
@@ -345,13 +316,18 @@ def test_link_prededup_modes_equivalent(spark, tmp_path, corpus):
         )
         return seen, log
 
-    ref = go("lpd_off", False)
-    assert go("lpd_on", True) == ref
-    assert go("lpd_adaptive", None) == ref
+    assert go("lpd_on", 0.0) == go("lpd_off", float("inf"))
 
 
+@pytest.mark.filterwarnings("error:Spark session is not provided")
 def test_counters_consistent(spark, tmp_path, corpus):
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
     _, metrics, state = crawl(spark, tmp_path, corpus, "counters")
+    # every round cache (politeness stage, wave, candidates, new entries)
+    # is released, including the ones the write pool threads read
+    after = set(jsc.getPersistentRDDs().keySet().toArray())
+    assert after <= before, f"leaked persisted RDDs: {after - before}"
     for m in metrics:
         log_n = (
             state.read_round(spark, "fetch_log", m.round)
@@ -367,38 +343,3 @@ def test_counters_consistent(spark, tmp_path, corpus):
             + m.retried + m.recrawled
         )
         assert m.per_partition  # lineage populated
-
-
-def test_parallel_writes_equivalent(spark, tmp_path, corpus):
-    """r6: parallel_writes only changes WHEN the independent round writes
-    are issued (thread pool vs serial) — every artifact and counter must
-    be byte-identical to the serial shape."""
-    _, m_par, st_par = crawl(spark, tmp_path, corpus, "pw_on")
-    _, m_ser, st_ser = crawl(
-        spark, tmp_path, corpus, "pw_off",
-        CrawlConfig(max_rounds=3, parallel_writes=False),
-    )
-
-    def snap(st):
-        seen = sorted(r["url_sha1"] for r in st.read_all(spark, "seen").collect())
-        # robots rows carry NULL seq_in_host -> sort on stringified keys
-        log = sorted(
-            ((r["round"], r["host"], r["seq_in_host"], r["url_sha1"], r["status"])
-             for r in st.read_all(spark, "fetch_log").collect()),
-            key=lambda t: tuple(map(str, t)),
-        )
-        frontier = sorted(
-            (r["round"], r["url_sha1"], r["depth"], r["not_before_round"])
-            for r in st.read_all(spark, "frontier").collect()
-        )
-        return seen, log, frontier
-
-    assert snap(st_par) == snap(st_ser)
-    for a, b in zip(m_par, m_ser):
-        assert (a.fetched, a.dead, a.enqueued, a.deduped,
-                a.deferred_by_politeness, a.robots_blocked,
-                a.per_partition) == (
-            b.fetched, b.dead, b.enqueued, b.deduped,
-            b.deferred_by_politeness, b.robots_blocked, b.per_partition)
-    # no cache leaks from the threaded path either
-    assert not spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from data_collector_spark.crawler.driver import CrawlConfig, run_crawl
 from data_collector_spark.crawler.state import CrawlState
 from data_collector_spark.crawler.webtext import build_training_set, latest_pages
+from data_collector_spark.plans import training
 from data_collector_spark.sources.generator import synth_pages
 
 
@@ -233,17 +234,23 @@ def test_components_resolution_in_training_set(spark, crawl_wd):
     assert c_ids == c2
 
 
-def test_components_mode_leaves_no_caches(spark, crawl_wd):
-    """ADVICE r4: the min-label-propagation caches must not outlive
-    build_training_set — the loser set is materialized to a workdir side
-    table, so running AND consuming the pipeline adds zero persistent
-    RDDs to the session."""
+@pytest.mark.parametrize(
+    "pipeline", ["training_set_components", "dedup_minhash_lsh", "dedup_simhash"]
+)
+def test_components_mode_leaves_no_caches(spark, crawl_wd, sf_dir, pipeline):
+    """ADVICE r4: no cache a pipeline takes may outlive it — running AND
+    consuming it adds zero persistent RDDs to the session. The training
+    set's components mode materializes its loser set to a workdir side
+    table; the near-dup pair queries keep their doc->rep map uncached."""
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet().toArray())
-    ts = build_training_set(
-        spark, crawl_wd, lang=None, min_quality=0.0, resolution="components"
-    )
-    assert ts.count() > 0  # materialize the caller's lazy pipeline too
+    if pipeline == "training_set_components":
+        df = build_training_set(
+            spark, crawl_wd, lang=None, min_quality=0.0, resolution="components"
+        )
+        assert df.count() > 0  # materialize the caller's lazy pipeline too
+    else:
+        getattr(training, pipeline)(spark, sf_dir).count()
     after = set(jsc.getPersistentRDDs().keySet().toArray())
     assert after <= before, f"leaked persisted RDDs: {after - before}"
 
