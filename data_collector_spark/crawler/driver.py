@@ -8,9 +8,13 @@ commits one snapshot, and execution mode RepeatLimited(count)
 (/root/reference/src/dag_schedule/task.rs:49-55) is ``max_rounds``.
 
 Everything that is constant across rounds is resolved ONCE before the
-loop — budget compilation, robots emptiness, corpus partition count,
+loop — budget compilation, the robots snapshot, corpus partition count,
 duplicate-capture detection — so the per-round serial fraction is a fixed
-handful of Spark jobs (the N-vs-4N scaling-efficiency bar).
+handful of Spark jobs (the N-vs-4N scaling-efficiency bar). The caller's
+robots and budgets tables are each read exactly once per ``run_crawl``,
+whatever the round count: both come back to the driver as Arrow and
+re-enter the plans as local relations (robots above its broadcast gate
+excepted — that table stays distributed).
 
 Resume: ``run_crawl`` on an existing workdir drops crash debris past the
 last committed round and continues — the analog of resuming from
@@ -31,6 +35,8 @@ import os
 from data_collector_spark.crawler.round import _n, _obs_metrics, run_round
 from data_collector_spark.crawler.state import (
     FETCH_LOG_SCHEMA,
+    FRONTIER_SCHEMA,
+    SEEN_SCHEMA,
     CrawlState,
     RoundMetrics,
 )
@@ -160,8 +166,12 @@ class CrawlConfig:
 
 def init_crawl(
     spark: SparkSession, state: CrawlState, seeds: DataFrame, cfg: CrawlConfig
-) -> None:
-    """Round-0 state: canonicalized deduped seeds as frontier and seen."""
+) -> tuple[int, int]:
+    """Round-0 state: canonicalized deduped seeds as frontier and seen.
+
+    -> (frontier-0 rows, approximate distinct frontier-0 hosts), observed
+    on the frontier write itself, so the driver's first wave bound costs
+    no count job."""
     # seed lists often arrive as one partition (limit/collect artifacts);
     # spread them so canonicalization parallelizes
     seeds = seeds.repartition(spark.sparkContext.defaultParallelism)
@@ -181,25 +191,60 @@ def init_crawl(
             "priority", "attempt", "not_before_round",
         )
     )
-    state.write_round("frontier", 0, f0)
     obs0 = Observation()
-    seen0 = (
-        state.read_round(spark, "frontier", 0)
-        .select("url_sha1", "url_canon")
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
+    state.write_round(
+        "frontier", 0,
+        f0.observe(
+            obs0,
+            F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct("host").alias("hosts"),
+        ),
     )
-    state.write_round("seen", 0, seen0)
-    n_seen0 = _n(_obs_metrics(obs0), "n")
+    m0 = _obs_metrics(obs0)
+    # seen 0 is frontier 0's keys, so it has frontier 0's row count
+    n_seen0 = _n(m0, "n")
+    state.write_round(
+        "seen", 0,
+        state.read_round(spark, "frontier", 0, FRONTIER_SCHEMA)
+        .select("url_sha1", "url_canon"),
+    )
     # below the activation gate the filter build is deferred until the
     # seen set is big enough to need a prefilter (bloom_min_seen_rows);
     # the driver loop builds it from the full seen table at the crossing
     if cfg.bloom_min_seen_rows == 0 or n_seen0 >= cfg.bloom_min_seen_rows:
         bloom = cfg.make_bloom()
         if bloom is not None:
-            cfg.fill_bloom(bloom, state.read_round(spark, "seen", 0), state.bloom_dir())
+            cfg.fill_bloom(
+                bloom, state.read_round(spark, "seen", 0, SEEN_SCHEMA),
+                state.bloom_dir(),
+            )
     # seen-row count rides the manifest so resume never re-counts the
     # table (the activation gate reads it O(1) driver-side)
     state.commit(-1, None, extra={"initialized": True, "seen_rows": n_seen0})
+    return n_seen0, _n(m0, "hosts")
+
+
+def snapshot_robots(
+    spark: SparkSession, robots: DataFrame, max_rows: int
+) -> tuple[DataFrame | None, bool]:
+    """-> (rules for every round, broadcast them?) from ONE read of the
+    caller's robots table.
+
+    The rule count answers both the emptiness shortcut (None: no rules)
+    and the broadcast gate, and it is CAPPED at the gate (ADVICE r5), so
+    an unbounded rules plan (``parse_robots_txt`` over a large corpus) is
+    never materialised past ``max_rows + 1`` rows. Under the gate the
+    snapshot itself — the rows each round's rules broadcast would collect
+    to the driver anyway — becomes a local relation, so no round re-scans
+    the caller's table; above it the table stays distributed and joins by
+    shuffle."""
+    cols = ["host", "path_prefix"] + (["allow"] if "allow" in robots.columns else [])
+    snap = robots.select(*cols).limit(max_rows + 1).toArrow()
+    if snap.num_rows == 0:
+        return None, True
+    if snap.num_rows > max_rows:
+        return robots, False
+    return spark.createDataFrame(snap), True
 
 
 def _frontier_rows_estimate(m: RoundMetrics) -> int:
@@ -228,8 +273,10 @@ def run_crawl(
     the Iceberg mapping); default is the parquet round-dir scheme."""
     cfg = cfg or CrawlConfig()
     state = state if state is not None else CrawlState(workdir)
+    # (rows, hosts) of the first round's frontier; None = count it below
+    first: tuple[int, int] | None = None
     if state.read() is None:
-        init_crawl(spark, state, seeds, cfg)
+        first = init_crawl(spark, state, seeds, cfg)
     else:
         state.drop_uncommitted()
     from data_collector_spark.operators.cuckoo import CuckooSchemeMismatch
@@ -271,15 +318,12 @@ def run_crawl(
     ):
         seen_all0 = state.read_all(spark, "seen")
         seen_rows = seen_all0.count() if seen_all0 is not None else 0
+    # robots and budgets are read ONCE per run_crawl, never in the round
+    # loop: compile_budgets makes one Arrow read of the budgets table
     budget_spec = compile_budgets(spark, budgets, cfg.default_budget)
-    # rule count drives BOTH the emptiness shortcut and the broadcast
-    # gate; once per crawl, never in the round loop — and CAPPED at the
-    # gate (ADVICE r5): limit(max+1).count() answers both questions
-    # without materializing the whole rules plan when robots is the
-    # output of parse_robots_txt over a large corpus
-    n_robots_rules = robots.limit(cfg.robots_broadcast_max_rows + 1).count()
-    robots_rules = robots if n_robots_rules > 0 else None
-    robots_broadcast = n_robots_rules <= cfg.robots_broadcast_max_rows
+    robots_rules, robots_broadcast = snapshot_robots(
+        spark, robots, cfg.robots_broadcast_max_rows
+    )
     pages_partitions = pages.rdd.getNumPartitions()
     # one column-pruned scan: do multiple captures of one URL exist?
     dedup_captures = (
@@ -313,10 +357,13 @@ def run_crawl(
                     .groupBy("host")
                     .agg(F.count("*").cast("long").alias("spent")),
                 )
-    first = state.read_round(spark, "frontier", start).agg(
-        F.count("*").alias("n"), F.countDistinct("host").alias("hosts")
-    ).collect()[0]
-    frontier_rows, frontier_hosts = int(first["n"]), int(first["hosts"])
+    if first is None:
+        # resume: one job over the committed frontier
+        row = state.read_round(spark, "frontier", start, FRONTIER_SCHEMA).agg(
+            F.count("*").alias("n"), F.countDistinct("host").alias("hosts")
+        ).collect()[0]
+        first = int(row["n"]), int(row["hosts"])
+    frontier_rows, frontier_hosts = first
 
     def wave_bound() -> int:
         """Upper bound on the next wave: it can never exceed the frontier,

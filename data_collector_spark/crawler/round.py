@@ -32,11 +32,11 @@ Stages (all lazy until the writes):
 
 Every counter a round reports rides the write actions as an
 ``Observation`` (CollectMetrics nodes inside the plans that must execute
-anyway), so no Spark job runs just to count. The jobs that are mutually
-independent once pages_out is written (fetch_log write, frontier write,
-lineage top-k, and the seen write after the frontier) are issued
-concurrently from a thread pool, overlapping their fixed scheduling/tail
-costs instead of paying them serially.
+anyway), so no Spark job runs just to count — the per-host lineage
+included. The jobs that are mutually independent once pages_out is
+written (fetch_log write, frontier write, and the seen write after the
+frontier) are issued concurrently from a thread pool, overlapping their
+fixed scheduling/tail costs instead of paying them serially.
 
 The Bloom update lands *before* the manifest commit: a crash in between
 leaves extra bits set, which only causes false positives — and every
@@ -46,7 +46,7 @@ positive is re-checked by the exact anti-join, so correctness holds.
 from __future__ import annotations
 
 import time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 from typing import TYPE_CHECKING
 
 from pyspark import inheritable_thread_target
@@ -183,6 +183,23 @@ def update_host_spend(
     state.write_round("host_spend", round_n + 1, cur.select("host", F.col("spent").cast("long")))
 
 
+def submit_inheriting(
+    ex: ThreadPoolExecutor, spark: SparkSession, fn, *args
+) -> Future:
+    """``ex.submit(fn, *args)`` with the submitting thread's Spark local
+    properties and session tags applied in the worker thread.
+
+    Plain pool threads do NOT inherit the parent's JVM-thread-local
+    properties under pinned-thread mode, so the jobs would escape any
+    spark.scheduler.pool / job group / session tag set by a pipeline
+    runner. ``inheritable_thread_target(spark)`` clones the properties
+    ONCE, when it is called, and every function it then wraps installs
+    that same Java object — so it is called once per task here: tasks
+    sharing one clone would overwrite each other's
+    ``spark.sql.execution.id`` and ``spark.job.description``."""
+    return ex.submit(inheritable_thread_target(spark)(fn), *args)
+
+
 def run_round(
     spark: SparkSession,
     state: CrawlState,
@@ -313,11 +330,16 @@ def run_round(
             obs_pages,
             F.count(F.lit(1)).alias("n"),
             F.sum(F.size("links")).alias("links"),
+            # lineage: the host with the highest fetched seq_in_host (ties
+            # to the larger host name, so the pick is deterministic)
+            F.max(F.struct("seq_in_host", "host")).alias("top"),
         )
         state.write_round("pages_out", round_n, extracted)
         pm = _obs_metrics(obs_pages)
         m.fetched = _n(pm, "n")
         m.links_extracted = _n(pm, "links")
+        if m.fetched:
+            m.per_partition = {pm["top"]["host"]: pm["top"]["seq_in_host"]}
         fetched = state.read_round(spark, "pages_out", round_n, PAGES_OUT_SCHEMA)
 
         # fetch_log: per-host ordering lineage (replay-equivalence invariant)
@@ -445,44 +467,28 @@ def run_round(
             obs_frontier, F.approx_count_distinct("host").alias("hosts")
         )
 
-        def lineage_top():
-            # per-partition lineage: fetched rows per host (bounded: top 50)
-            # — a column-pruned scan of the just-written pages_out round
-            return (
-                fetched.groupBy("host").count()
-                .orderBy(F.desc("count"), "host").limit(50).collect()
-            )
-
         obs_seen = Observation()
         seen_out = new_entries.select("url_sha1", "url_canon").observe(
             obs_seen, F.count(F.lit(1)).alias("n")
         )
 
-        # The fetch_log write, the frontier write, and the lineage top-k are
-        # INDEPENDENT jobs once pages_out is on disk (the log reads
-        # wave+fetched, the frontier reads deferred/new_entries/held, the
-        # lineage reads fetched) — issuing them from a thread pool overlaps
-        # their fixed per-job costs (scheduling, small-stage tails that
-        # leave cores idle). Each write is its own round-dir job, so there
-        # is no shared mutable state; the cached new_entries is
-        # materialized by the frontier job alone. The seen write (which
-        # reads that cache) rides the SAME pool as a dependent
-        # continuation: it blocks on the frontier future and then overlaps
-        # with the log/lineage tails.
-        #
-        # inheritable_thread_target(spark): plain pool threads do NOT
-        # inherit the parent's JVM-thread-local properties under
-        # pinned-thread mode, so the jobs would escape any
-        # spark.scheduler.pool / job group / session tag set by a pipeline
-        # runner — the wrapper captures the submitting thread's properties
-        # and tags and re-applies them inside the worker thread
-        inherit = inheritable_thread_target(spark)
-        with ThreadPoolExecutor(max_workers=4) as ex:
-            f_log = ex.submit(inherit(state.write_round), "fetch_log", round_n, log)
-            f_frontier = ex.submit(
-                inherit(state.write_round), "frontier", round_n + 1, frontier_next
+        # The fetch_log write and the frontier write are INDEPENDENT jobs
+        # once pages_out is on disk (the log reads wave+fetched, the
+        # frontier reads deferred/new_entries/held) — issuing them from a
+        # thread pool overlaps their fixed per-job costs (scheduling,
+        # small-stage tails that leave cores idle). Each write is its own
+        # round-dir job, so there is no shared mutable state; the cached
+        # new_entries is materialized by the frontier job alone. The seen
+        # write (which reads that cache) rides the SAME pool as a
+        # dependent continuation: it blocks on the frontier future and
+        # then overlaps with the log's tail.
+        with ThreadPoolExecutor(max_workers=3) as ex:
+            f_log = submit_inheriting(
+                ex, spark, state.write_round, "fetch_log", round_n, log
             )
-            f_top = ex.submit(inherit(lineage_top))
+            f_frontier = submit_inheriting(
+                ex, spark, state.write_round, "frontier", round_n + 1, frontier_next
+            )
 
             def seen_after_frontier():
                 # wait for the frontier job: it alone fills the cached
@@ -490,10 +496,9 @@ def run_round(
                 f_frontier.result()
                 state.write_round("seen", round_n + 1, seen_out)
 
-            f_seen = ex.submit(inherit(seen_after_frontier))
+            f_seen = submit_inheriting(ex, spark, seen_after_frontier)
             f_log.result()
             f_frontier.result()
-            top = f_top.result()
             f_seen.result()
         if daily:
             update_host_spend(spark, state, round_n, cfg.rounds_per_day)
@@ -510,7 +515,6 @@ def run_round(
         # — zero dedicated counter jobs per round
         uniq = sum(_n(_obs_metrics(o), "n") for o in cand_count_obs)
         m.deduped = uniq - m.enqueued
-        m.per_partition = {r["host"]: r["count"] for r in top}
 
         if bloom is not None and m.enqueued:
             # the delta just written to seen/round=N+1 is exactly

@@ -48,6 +48,11 @@ SEEN_SCHEMA = "url_sha1 string, url_canon string"
 FETCH_LOG_SCHEMA = (
     "url_canon string, url_sha1 string, host string, seq_in_host int, status string"
 )
+# tables whose layout the engine fixes: read_all passes the schema instead
+# of running a footer-reading inference job per read
+READ_ALL_SCHEMAS = {
+    "frontier": FRONTIER_SCHEMA, "seen": SEEN_SCHEMA, "fetch_log": FETCH_LOG_SCHEMA,
+}
 
 
 @dataclass
@@ -67,6 +72,10 @@ class RoundMetrics:
     deduped: int = 0          # dropped as already-seen (incl. within-round dups)
     enqueued: int = 0         # new frontier entries
     wall_sec: float = 0.0
+    # lineage: {host with the highest fetched seq_in_host: that seq}, one
+    # entry ({} when nothing was fetched). The seq is an upper bound on
+    # the host's fetched pages this round (dead URLs leave gaps in
+    # seq_in_host), so value / fetched bounds the top host's share
     per_partition: dict = field(default_factory=dict)
 
     def as_dict(self) -> dict:
@@ -238,13 +247,18 @@ class CrawlState:
             return from_io
         base = self._dir(table)
         ck = self.compacted_upto(table)
+        schema = READ_ALL_SCHEMAS.get(table)
         parts = []
         if ck is not None:
-            parts.append(spark.read.parquet(self._base_dir(table, ck)))
+            # a compacted base holds `round` as a data column
+            reader = spark.read.schema(f"{schema}, round int") if schema else spark.read
+            parts.append(reader.parquet(self._base_dir(table, ck)))
         live = self._live_round_dirs(table)
         if live:
+            # the round dirs' partition column is appended to the schema
+            reader = spark.read.schema(schema) if schema else spark.read
             parts.append(
-                spark.read.option("basePath", base).parquet(
+                reader.option("basePath", base).parquet(
                     *(self._dir(table, n) for n in live)
                 )
             )

@@ -102,13 +102,35 @@ def _bind(expr: Column, fn) -> Column:
     return F.get(F.transform(F.array(expr), fn), 0)
 
 
+# built canonicalize_col Columns, per input column name: (gateway, Column)
+_CANON_BUILT: dict[str, tuple[object, Column]] = {}
+
+
 def canonicalize_col(url: Column | str) -> Column:
-    """JVM-side canonicalization — the same rules as
-    ``canonicalize_series`` as pure built-in expressions, so the biggest
-    per-row pass of the crawl loop (every extracted link, 1-2M rows/round
-    at bench scale) runs JVM-side with NO Python worker hop. Deliberately
-    REGEX-FREE on the per-row hot path (btrim / substring_index / instr /
-    substr arithmetic): a java.util.regex port of the reference pattern
+    """JVM-side canonicalization — the same rules as ``canonicalize_series``;
+    see ``_build_canonicalize_col``. Building the expression tree costs
+    hundreds of py4j calls, so the Column built for a column NAME is kept
+    and reused for as long as the JVM gateway that built it is alive (a
+    Column is an unresolved expression, valid in any plan of that JVM)."""
+    if not isinstance(url, str):
+        return _build_canonicalize_col(url)
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    built = _CANON_BUILT.get(url)
+    # identity, not id(): a later gateway may reuse a dead one's id
+    if built is None or built[0] is not gateway:
+        built = (gateway, _build_canonicalize_col(F.col(url)))
+        _CANON_BUILT[url] = built
+    return built[1]
+
+
+def _build_canonicalize_col(c: Column) -> Column:
+    """The rules of ``canonicalize_series`` as pure built-in expressions,
+    so the biggest per-row pass of the crawl loop (every extracted link,
+    1-2M rows/round at bench scale) runs JVM-side with NO Python worker
+    hop. Deliberately REGEX-FREE on the per-row hot path (btrim /
+    substring_index / instr / substr arithmetic): a java.util.regex port of the reference pattern
     measured SLOWER than the Arrow+pandas single-extract it replaced.
     Intermediates are staged through ``_bind`` so each evaluates once.
 
@@ -121,7 +143,6 @@ def canonicalize_col(url: Column | str) -> Column:
     crosses neither '.', nor '$' past a non-final newline); and
     query-param sort order matches Python ``sorted()`` because UTF-8 byte
     order == code-point order."""
-    c = F.col(url) if isinstance(url, str) else url
     prep = F.substring_index(F.btrim(c, F.lit(_PY_WS_CHARS)), "#", 1)
 
     def with_s(s):
@@ -234,7 +255,7 @@ def with_canonical_url(
     ``engine="pandas"`` keeps the Arrow-batched reference implementation
     (the two are equivalence-pinned and interchangeable)."""
     canon = (
-        canonicalize_col(F.col(url_col))
+        canonicalize_col(url_col)
         if engine == "jvm"
         else canonicalize_udf(F.col(url_col))
     )

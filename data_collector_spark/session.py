@@ -75,6 +75,11 @@ def get_spark(
         # cluster where files are TB-scale)
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(1 * 1024 * 1024))
+        # on (PySpark's default), every pyspark.sql.functions call walks
+        # the Python stack for its call site and pays ~4 extra py4j round
+        # trips; the price of off is that DataFrame error contexts no
+        # longer name the Python line that built the failing expression
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # shuffle spill dir: the sandbox's /tmp is one virtio disk and shuffle
     # writeback stalls dominate round walls (measured 2-4x swings); tmpfs

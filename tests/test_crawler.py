@@ -342,4 +342,91 @@ def test_counters_consistent(spark, tmp_path, corpus):
             m.deferred_by_politeness + m.enqueued + m.held_by_backoff
             + m.retried + m.recrawled
         )
-        assert m.per_partition  # lineage populated
+        # lineage: the host with the highest fetched seq_in_host, whose
+        # seq bounds every host's fetched count from above
+        per_host = [
+            r["count"]
+            for r in state.read_round(spark, "fetch_log", m.round)
+            .filter(F.col("status") == "fetched").groupBy("host").count().collect()
+        ]
+        assert len(m.per_partition) == 1
+        assert max(m.per_partition.values()) >= max(per_host)
+
+
+def _counted(spark, df, acc):
+    """``df`` re-served from a Python RDD whose map adds 1 to ``acc`` per
+    row read — the shape of a caller's ``createDataFrame(list)`` table."""
+
+    def read(row):
+        acc.add(1)
+        return row
+
+    return spark.createDataFrame(df.rdd.map(read), df.schema)
+
+
+def test_robots_and_budgets_read_once_per_crawl(spark, tmp_path, corpus):
+    """Both crawl-constant inputs are read once per run_crawl, not once
+    per round (nor three times for robots: gate count, rules broadcast,
+    blocked branch)."""
+    sc = spark.sparkContext
+    robots_reads, budget_reads = sc.accumulator(0), sc.accumulator(0)
+    robots = synth_robots(spark)
+    budgets = synth_politeness(spark)
+    n_robots, n_budgets = robots.count(), budgets.count()
+    _, metrics, _ = crawl(
+        spark, tmp_path, corpus, "read_once",
+        robots=_counted(spark, robots, robots_reads),
+        budgets=_counted(spark, budgets, budget_reads),
+    )
+    assert len(metrics) == 3 and sum(m.robots_blocked for m in metrics) > 0
+    assert robots_reads.value == n_robots
+    assert budget_reads.value == n_budgets
+
+
+def test_fresh_crawl_job_count(spark, tmp_path, corpus):
+    """Spark jobs of a fresh 2-round crawl: 50 (the engine ran 63 before
+    robots and budgets were read once per crawl, the frontier-0 count and
+    the lineage top-k became observations and read_all stopped inferring
+    the seen schema). A rise means a job was added to init, the preamble
+    or a round."""
+    sc = spark.sparkContext
+    group = "test_fresh_crawl_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        _, metrics, _ = crawl(
+            spark, tmp_path, corpus, "jobs", cfg=CrawlConfig(max_rounds=2)
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(metrics) == 2
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 50, f"{len(jobs)} Spark jobs for a fresh 2-round crawl"
+
+
+def test_pool_tasks_get_their_own_local_properties(spark):
+    """Each write-pool task gets its OWN copy of the submitting thread's
+    local properties: a property one task sets (as a write sets
+    spark.sql.execution.id) is invisible to a concurrent task."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from data_collector_spark.crawler.round import submit_inheriting
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("dcs.test.inherited", "parent")
+    both_set = threading.Barrier(2)
+
+    def task(value):
+        inherited = sc.getLocalProperty("dcs.test.inherited")
+        sc.setLocalProperty("dcs.test.own", value)
+        both_set.wait(timeout=60)
+        return inherited, sc.getLocalProperty("dcs.test.own")
+
+    try:
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            fa = submit_inheriting(ex, spark, task, "a")
+            fb = submit_inheriting(ex, spark, task, "b")
+            assert (fa.result(), fb.result()) == (("parent", "a"), ("parent", "b"))
+    finally:
+        sc.setLocalProperty("dcs.test.inherited", None)
+    assert sc.getLocalProperty("dcs.test.own") is None

@@ -108,6 +108,19 @@ def test_jvm_matches_pandas_reference(spark):
     assert [r["c"] for r in again] == canon
 
 
+def test_canonicalize_col_built_once_per_column_name(spark):
+    """The expression tree is built once per input column name and reused
+    (the df2 pass above already runs a reused one); a Column argument is
+    always built fresh."""
+    from pyspark.sql import functions as F
+
+    from data_collector_spark.functions.urls import canonicalize_col
+
+    assert canonicalize_col("url") is canonicalize_col("url")
+    assert canonicalize_col("url") is not canonicalize_col("link")
+    assert canonicalize_col(F.col("url")) is not canonicalize_col(F.col("url"))
+
+
 def test_with_canonical_url_engines_agree(spark):
     df = spark.createDataFrame([(u,) for u in ADVERSARIAL], "url string")
     a = sorted(
